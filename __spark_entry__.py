@@ -53,6 +53,9 @@ _FRONT_PINS = [
     # RLE coder, replayed float op order; pinned in
     # test_operators.py::test_{jpeg,ipdv}_encoder_twins_*). Every query
     # below strict-sim re-verified at sf0.01 AND sf0.1 this round.
+    # Codec cleanup: one production path per codec, called directly
+    # (env dispatch, ctypes/Pillow hooks, numpy PNG twin deleted); the
+    # decoded values are unchanged.
     "multimodal_bmp_decode",
     "multimodal_gif_decode",
     "multimodal_image_features",

@@ -724,13 +724,13 @@ def multimodal_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="L5 REAL baseline-JPEG decode: genuine Huffman-coded JFIF payloads "
     "synthesized per row, then entropy-decoded + dequantized + IDCT'd by "
-    "the pure-Python baseline codec through mapInPandas. Payloads are "
+    "the baseline codec through mapInPandas. Payloads are "
     "constant 8x8 blocks under an all-8s quant table — the one JPEG "
     "configuration that decodes bit-exactly — so the oracle recomputes "
     "the decoded stats in SQL and the full decode pipeline (canonical "
     "Huffman, DC prediction, zigzag, separable IDCT) is value-checked "
     "cross-engine. operators/multimodal.py::attach_jpeg_media / "
-    "_decode_jpeg.",
+    "_decode_jpeg_numpy.",
 )
 def multimodal_jpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_sample_spark.operators.multimodal import attach_jpeg_media, decode_image
@@ -2594,7 +2594,7 @@ def tokenizer_fertility_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     "banker's while SQL ROUND is half-away — the one observable "
     "rounding-mode seam, closed by construction. Oracle replays "
     "generator -> encoder matrix -> decoder matrix arithmetic in SQL. "
-    "operators/multimodal.py::attach_jpeg_color_media / _decode_jpeg.",
+    "operators/multimodal.py::attach_jpeg_color_media / _decode_jpeg_numpy.",
 )
 def multimodal_jpeg_color_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_sample_spark.operators.multimodal import attach_jpeg_color_media, decode_image
@@ -3224,7 +3224,7 @@ def entity_resolution_part_names(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="L5 REAL compressed-video decode: genuine Motion-JPEG AVI "
     "payloads — each '00dc' chunk a real Huffman-coded baseline JFIF — "
     "container-walked AND per-frame entropy-decoded (Huffman + dequant "
-    "+ IDCT) by the pure-Python codecs through mapInPandas; every 2nd "
+    "+ IDCT) by the in-repo codecs through mapInPandas; every 2nd "
     "frame sampled. Constant 8x8 blocks + all-8s quant decode "
     "bit-exactly, so the oracle recomputes the sampled frame means in "
     "SQL and the whole compressed-video path is value-checked "

@@ -384,79 +384,46 @@ def test_png_grayscale_and_bad_filter_guard():
         _decode_png(b)
 
 
-def test_png_decoder_twins_bit_identical_and_env_selectable(monkeypatch):
-    """The r12 VERDICT item-5 swap-in: _decode_png dispatches between the
-    pure-Python oracle twin and the numpy-accelerated twin (the stand-in
-    for a native decoder — none exists in this container). The twins
-    must agree BYTE-FOR-BYTE on payloads exercising every filter type,
-    both color and grayscale, and the env-var switch must honor
-    pure/numpy and reject unknown names."""
+def test_png_decoder_round_trips_encoder_pixels():
+    """_png_raw is the only PNG decoder, so pin it against the encoder:
+    decoding returns exactly the input samples for color payloads whose
+    scanlines cycle through all five filter types (encode_png assigns
+    filter y % 5), the 1-pixel edges, and a grayscale payload built here
+    with one filter type per row."""
     import struct
     import zlib
 
     from etl_sample_spark.operators import multimodal as mm
 
-    fixtures = []
     for seed in (0, 3, 11):
         for w, h in ((1, 1), (1, 7), (4, 5), (17, 11), (32, 6)):
-            fixtures.append(
-                mm.encode_png(
-                    w,
-                    h,
-                    lambda x, y, s=seed: bytes(
-                        ((s * 131 + x * 7 + y * 13 + c * 97) % 256)
-                        for c in range(3)
-                    ),
-                )
-            )
-    # grayscale (color type 0), one row per filter type 0-4. The data
-    # bytes are arbitrary — any byte stream under filter types 0-4 has a
-    # well-defined unfiltering, and twin AGREEMENT (not round-trip
-    # fidelity) is what this fixture asserts.
+            def px(x, y, s=seed):
+                return bytes(((s * 131 + x * 7 + y * 13 + c * 97) % 256) for c in range(3))
+
+            want = bytearray(v for y in range(h) for x in range(w) for v in px(x, y))
+            assert mm._png_raw(mm.encode_png(w, h, px)) == (w, h, 3, want)
+
+    # grayscale (color type 0, bpp 1), row y filtered with type y % 5
     gw, gh = 6, 5
+    pix = [[(y * 37 + x * 11 + (x * y) % 7) % 256 for x in range(gw)] for y in range(gh)]
     graw = bytearray()
     for y in range(gh):
-        graw.append(y % 5)
-        graw.extend(((y * 37 + x * 11) % 256) for x in range(gw))
-    graw = bytes(graw)
+        ft = y % 5
+        graw.append(ft)
+        for x in range(gw):
+            left = pix[y][x - 1] if x else 0
+            up = pix[y - 1][x] if y else 0
+            ul = pix[y - 1][x - 1] if x and y else 0
+            pred = (0, left, up, (left + up) // 2, mm._paeth(left, up, ul))[ft]
+            graw.append((pix[y][x] - pred) & 0xFF)
     ihdr = struct.pack(">IIBBBBB", gw, gh, 8, 0, 0, 0, 0)
     gray = (
         mm._PNG_SIG
         + mm._png_chunk(b"IHDR", ihdr)
-        + mm._png_chunk(b"IDAT", zlib.compress(graw))
+        + mm._png_chunk(b"IDAT", zlib.compress(bytes(graw)))
         + mm._png_chunk(b"IEND", b"")
     )
-    fixtures.append(gray)
-
-    for payload in fixtures:
-        pure = mm._png_raw(payload)
-        fast = mm._png_raw_numpy(payload)
-        assert fast == pure  # (w, h, bpp, samples) — samples byte-for-byte
-
-    payload = fixtures[3]
-    want = mm._png_raw(payload)
-    monkeypatch.setenv("SPARK_GRAFT_PNG_DECODER", "pure")
-    assert mm._png_raw_dispatch(payload) == want
-    monkeypatch.setenv("SPARK_GRAFT_PNG_DECODER", "numpy")
-    assert mm._png_raw_dispatch(payload) == want
-    monkeypatch.setenv("SPARK_GRAFT_PNG_DECODER", "imagemagick")
-    with pytest.raises(ValueError, match="SPARK_GRAFT_PNG_DECODER"):
-        mm._png_raw_dispatch(payload)
-
-
-def test_png_decoder_pil_twin_matches_if_available():
-    """Equivalence of the Pillow-backed twin — self-skips where Pillow is
-    absent (this container: no PIL/cv2/scipy, verified r13; the numpy
-    twin above is the demonstrated swap)."""
-    pytest.importorskip("PIL")
-
-    from etl_sample_spark.operators import multimodal as mm
-
-    for w, h in ((4, 5), (17, 11)):
-        payload = mm.encode_png(
-            w, h, lambda x, y: bytes(((x * 7 + y * 13 + c * 97) % 256) for c in range(3))
-        )
-        assert mm._png_raw_pil(payload) == mm._png_raw(payload)
+    assert mm._png_raw(gray) == (gw, gh, 1, bytearray(v for row in pix for v in row))
 
 
 def test_jpeg_huffman_tables_are_exactly_annex_k():
@@ -550,7 +517,7 @@ def test_unsupported_format_guards_raise_loudly():
         mm._decode_bmp(bytes(bmp))
 
     # PNG: 16-bit depth (rebuilt via _png_chunk so the chunk CRCs stay
-    # coherent) — both twins must refuse identically
+    # coherent)
     ihdr = struct.pack(">IIBBBBB", 4, 3, 16, 2, 0, 0, 0)
     png16 = (
         mm._PNG_SIG
@@ -558,9 +525,8 @@ def test_unsupported_format_guards_raise_loudly():
         + mm._png_chunk(b"IDAT", zlib.compress(bytes(25)))
         + mm._png_chunk(b"IEND", b"")
     )
-    for impl in (mm._png_raw, mm._png_raw_numpy):
-        with pytest.raises(NotImplementedError, match="8-bit gray/truecolor"):
-            impl(png16)
+    with pytest.raises(NotImplementedError, match="8-bit gray/truecolor"):
+        mm._png_raw(png16)
 
     # JPEG: four unsupported shapes, mutated from a valid gray fixture;
     # pure and numpy twins must both refuse with the same class
@@ -596,13 +562,15 @@ def test_unsupported_format_guards_raise_loudly():
     gif[desc + 9] |= 0x40
     with pytest.raises(NotImplementedError, match="interlaced GIF"):
         mm._decode_gif(bytes(gif))
+    with pytest.raises(ValueError, match="no image descriptor"):
+        mm._decode_gif(b"GIF89a" + b"\x00" * 30)
 
 
-def test_jpeg_decoder_twins_bit_identical_and_env_selectable(monkeypatch):
+def test_jpeg_decoder_twins_bit_identical(monkeypatch):
     """r13 extension of the VERDICT item-5 swap-in to the WORST documented
-    multimodal constant (pure-Python color JPEG). _decode_jpeg dispatches
-    between the pure oracle twin and the numpy twin (LUT-driven Huffman +
-    exact-op-order vectorized dequant/IDCT/color). Unlike native
+    multimodal constant (pure-Python color JPEG). The numpy twin
+    (LUT-driven Huffman + exact-op-order vectorized dequant/IDCT/color)
+    is the production decoder; the pure twin is its oracle. Unlike native
     decoders, the numpy twin IS bit-identical — every float stage replays
     the pure path's IEEE-754 operation order — and this pins it
     sample-for-sample across: gray + color, non-multiple-of-8 dims
@@ -649,16 +617,6 @@ def test_jpeg_decoder_twins_bit_identical_and_env_selectable(monkeypatch):
         for payload in fixtures:
             assert mm._decode_jpeg_numpy(payload) == mm._decode_jpeg_pure(payload)
     monkeypatch.undo()
-
-    payload = fixtures[3]
-    want = mm._decode_jpeg_pure(payload)
-    monkeypatch.setenv("SPARK_GRAFT_JPEG_DECODER", "pure")
-    assert mm._decode_jpeg(payload) == want
-    monkeypatch.setenv("SPARK_GRAFT_JPEG_DECODER", "numpy")
-    assert mm._decode_jpeg(payload) == want
-    monkeypatch.setenv("SPARK_GRAFT_JPEG_DECODER", "libjpeg-turbo")
-    with pytest.raises(ValueError, match="SPARK_GRAFT_JPEG_DECODER"):
-        mm._decode_jpeg(payload)
 
 
 def test_jpeg_huffman_lut_rejects_kraft_overflowing_dht():
@@ -908,178 +866,6 @@ def test_jpeg_wave_treats_zero_size_ac_symbols_as_eob(monkeypatch):
     else:
         with pytest.raises(raised):
             mm._decode_jpeg_numpy(payload)
-
-
-def test_native_decoder_dispatch_gates_on_hazard_probe(monkeypatch):
-    """r15 (ADVICE r14): the env-var dispatches must CONSULT the hazard
-    probes, not just document that callers should — an in-process
-    libjpeg/giflib call on an ABI-disagreeing build can exit()/segfault
-    the executor rather than raise. Pin: with the probe forced False,
-    SPARK_GRAFT_{JPEG,GIF}_DECODER={libjpeg,giflib} raises a clear
-    RuntimeError instead of invoking the ctypes hook."""
-    import pytest
-
-    from etl_sample_spark.operators import multimodal as mm
-
-    jpeg_payload = mm.encode_jpeg(8, 8, lambda x, y: 128, gray=True)
-    gif_payload = mm.encode_gif(5, 4, lambda x, y: 7)
-
-    hook_calls = []
-    monkeypatch.setattr(mm, "_libjpeg_available", lambda: False)
-    monkeypatch.setitem(
-        mm._JPEG_IMPLS, "libjpeg", lambda d: hook_calls.append("jpeg")
-    )
-    monkeypatch.setenv("SPARK_GRAFT_JPEG_DECODER", "libjpeg")
-    with pytest.raises(RuntimeError, match="hazard"):
-        mm._decode_jpeg(jpeg_payload)
-
-    monkeypatch.setattr(mm, "_giflib_available", lambda: False)
-    monkeypatch.setitem(
-        mm._GIF_IMPLS, "giflib", lambda d: hook_calls.append("gif")
-    )
-    monkeypatch.setenv("SPARK_GRAFT_GIF_DECODER", "giflib")
-    with pytest.raises(RuntimeError, match="hazard"):
-        mm._decode_gif_dispatch(gif_payload)
-    assert not hook_calls, "dispatch reached a native hook past a failed probe"
-
-    # a passing probe still authorizes the (stubbed) hook
-    monkeypatch.setattr(mm, "_libjpeg_available", lambda: True)
-    monkeypatch.setattr(mm, "_giflib_available", lambda: True)
-    mm._decode_jpeg(jpeg_payload)
-    mm._decode_gif_dispatch(gif_payload)
-    assert hook_calls == ["jpeg", "gif"]
-
-
-def test_gif_decoder_giflib_twin_exact_equal(monkeypatch):
-    """r14 (VERDICT item 5, GIF leg): the ctypes hook against the
-    container's system giflib 5 — only the serial LZW index decode is
-    native (DGifSlurp); the header walk, palette folding, and mean
-    arithmetic are the SHARED code paths, so results are EXACTLY equal
-    to the pure decoder (same ints, same float ops), not tolerance-
-    bound. Gated on the subprocess probe (the hook defines giflib's
-    public structs in ctypes and dereferences the raster pointer)."""
-    from etl_sample_spark.operators import multimodal as mm
-
-    if not mm._giflib_available():
-        pytest.skip("system giflib absent or failed the subprocess probe")
-
-    for dims in ((9, 7), (16, 16), (64, 48), (1, 1)):
-        payload = mm.encode_gif(*dims, lambda x, y: (x * 41 + y * 23) % 256)
-        assert mm._decode_gif_giflib(payload) == mm._decode_gif(payload)
-
-    monkeypatch.setenv("SPARK_GRAFT_GIF_DECODER", "giflib")
-    payload = mm.encode_gif(8, 8, lambda x, y: (x * y) % 256)
-    assert mm._decode_gif_dispatch(payload) == mm._decode_gif(payload)
-    monkeypatch.setenv("SPARK_GRAFT_GIF_DECODER", "nope")
-    with pytest.raises(ValueError, match="SPARK_GRAFT_GIF_DECODER"):
-        mm._decode_gif_dispatch(payload)
-    monkeypatch.undo()
-
-    # shared guards fire before any native call
-    with pytest.raises(ValueError, match="no image descriptor"):
-        mm._decode_gif_giflib(b"GIF89a" + b"\x00" * 30)
-    gif = bytearray(mm.encode_gif(4, 3, lambda x, y: x))
-    gct = 3 * (2 << (gif[10] & 0x07)) if gif[10] & 0x80 else 0
-    gif[13 + gct + 9] |= 0x40  # interlace flag
-    with pytest.raises(NotImplementedError, match="interlaced GIF"):
-        mm._decode_gif_giflib(bytes(gif))
-
-
-def test_png_decoder_libpng_twin_byte_identical(monkeypatch):
-    """r14 (VERDICT item 5, PNG leg): the ctypes hook against the
-    container's system libpng16 via the documented simplified png_image
-    API. PNG is LOSSLESS, so unlike the JPEG native twin this one is
-    pinned BYTE-IDENTICAL to the pure and numpy twins — across dims that
-    exercise every filter type (encode_png assigns filter y % 5), the
-    1×1 edge, and wide/tall aspect ratios. The probe is in-process-safe
-    (the simplified API reports errors by return code, no exit())."""
-    from etl_sample_spark.operators import multimodal as mm
-
-    if not mm._libpng_available():
-        pytest.skip("system libpng absent or failed the probe")
-
-    for dims in ((23, 17), (1, 1), (64, 8), (5, 40)):
-        payload = mm.encode_png(
-            *dims, lambda x, y: bytes(((x * 7) % 256, (y * 11) % 256, ((x * y) + y) % 256))
-        )
-        assert mm._png_raw_libpng(payload) == mm._png_raw(payload) == mm._png_raw_numpy(payload)
-
-    monkeypatch.setenv("SPARK_GRAFT_PNG_DECODER", "libpng")
-    w, h, bpp, _ = mm._png_raw_dispatch(mm.encode_png(9, 4, lambda x, y: bytes((x, y, 0))))
-    assert (w, h, bpp) == (9, 4, 3)
-
-    with pytest.raises(ValueError, match="libpng"):
-        mm._png_raw_libpng(b"\x89PNG\r\n\x1a\n" + b"junk" * 8)
-
-
-def test_jpeg_decoder_libjpeg_twin_within_tolerance(monkeypatch):
-    """r14 (VERDICT item 5): a NATIVE decoder executed for real — the
-    ctypes hook against the container's system libjpeg-turbo
-    (libjpeg.so.62, no install). Unlike the numpy twin it is NOT
-    bit-identical (T.81 mandates no exact IDCT; libjpeg uses
-    integer/SIMD IDCTs), so this pins shape exactly and samples to a
-    small per-sample tolerance across gray/color, odd dims (edge
-    padding), coarse quantization, and restart-marker streams (which
-    libjpeg consumes natively). Gated on the subprocess self-test —
-    in THIS container it runs, it does not skip."""
-    from etl_sample_spark.operators import multimodal as mm
-
-    if not mm._libjpeg_available():
-        pytest.skip("system libjpeg absent or failed the subprocess self-test")
-
-    def px(x, y):
-        v = (42 + x * 7919 + y * 104729) % (256**3)
-        return (v % 256, (v >> 8) % 256, (v >> 16) % 256)
-
-    fixtures = [
-        mm.encode_jpeg(16, 13, lambda x, y: (x * 9 + y * 5) % 256, gray=True),
-        mm.encode_jpeg(17, 11, px, gray=False),
-        mm.encode_jpeg(24, 16, px, gray=False, qtable=[16, 11, 10, 16, 24, 40, 51, 61] * 8),
-        mm.encode_jpeg(32, 24, px, gray=False, restart_interval=2),
-    ]
-    for payload in fixtures:
-        pw, ph, pn, ps = mm._decode_jpeg_pure(payload)
-        w, h, n, s = mm._decode_jpeg_libjpeg(payload)
-        assert (w, h, n) == (pw, ph, pn)
-        assert len(s) == len(ps)
-        worst = max(abs(a - b) for a, b in zip(s, ps))
-        assert worst <= 3, f"per-sample deviation {worst} exceeds tolerance"
-
-    # env dispatch reaches the hook
-    monkeypatch.setenv("SPARK_GRAFT_JPEG_DECODER", "libjpeg")
-    w, h, n, _s = mm._decode_jpeg(fixtures[1])
-    assert (w, h, n) == (17, 11, 3)
-
-    # non-JPEG payloads are rejected before any ctypes call
-    with pytest.raises(ValueError, match="not a JPEG payload"):
-        mm._decode_jpeg_libjpeg(b"\x89PNG\r\n")
-
-
-def test_jpeg_decoder_pil_twin_within_tolerance_if_available():
-    """Pillow-backed JPEG twin — self-skips where Pillow is absent (this
-    container). JPEG decoders are NOT bit-identical across
-    implementations (ITU T.81 mandates no exact IDCT; T.83 only bounds
-    the error, and libjpeg uses integer IDCT approximations), so the
-    native twin pins shape exactly and samples to a small per-sample
-    tolerance on near-lossless payloads."""
-    pytest.importorskip("PIL")
-
-    from etl_sample_spark.operators import multimodal as mm
-
-    for gray in (True, False):
-        payload = mm.encode_jpeg(
-            16,
-            13,
-            (lambda x, y: (x * 9 + y * 5) % 256)
-            if gray
-            else (lambda x, y: ((x * 9) % 256, (y * 5) % 256, (x + y) % 256)),
-            gray=gray,
-        )
-        w, h, nc, pure = mm._decode_jpeg_pure(payload)
-        pw, ph, pnc, pil = mm._decode_jpeg_pil(payload)
-        assert (pw, ph, pnc) == (w, h, nc)
-        assert len(pil) == len(pure)
-        assert max(abs(a - b) for a, b in zip(pure, pil)) <= 2
 
 
 def test_multimodal_features_fixed_dim(spark, sf_dir):
@@ -2369,10 +2155,10 @@ def test_asof_join_tied_right_row_is_picked_atomically(spark):
     assert (got[0]["a_asof"], got[0]["b_asof"]) == (None, None)
 
 
-def test_jpeg_encoder_twins_bit_identical_and_env_selectable(monkeypatch):
+def test_jpeg_encoder_twins_bit_identical():
     """r17: the synthesis side of the codec tier was the DOMINANT cost of
     the multimodal sweep (encode ~6x the decode — OPTIMIZATION_r17.md),
-    so encode_jpeg gained the same twin structure as _decode_jpeg: a
+    so encode_jpeg gained the same twin structure as the decoder: a
     numpy path that replays the pure path's exact float op order (color
     matrix, separable FDCT term accumulation, round-half-even
     quantization) and funnels into the SAME _emit_quant_block entropy
@@ -2415,18 +2201,12 @@ def test_jpeg_encoder_twins_bit_identical_and_env_selectable(monkeypatch):
         # and the payloads stay decodable by both decoder twins
         assert mm._decode_jpeg_numpy(fast) == mm._decode_jpeg_pure(fast)
 
+    # the public encoder is the numpy twin
     w, h, px, gray, qt, ri = cases[3]
-    want = mm._encode_jpeg_pure(w, h, px, gray, qt, ri)
-    monkeypatch.setenv("SPARK_GRAFT_JPEG_ENCODER", "pure")
-    assert mm.encode_jpeg(w, h, px, gray, qt, ri) == want
-    monkeypatch.setenv("SPARK_GRAFT_JPEG_ENCODER", "numpy")
-    assert mm.encode_jpeg(w, h, px, gray, qt, ri) == want
-    monkeypatch.setenv("SPARK_GRAFT_JPEG_ENCODER", "libjpeg")
-    with pytest.raises(ValueError, match="SPARK_GRAFT_JPEG_ENCODER"):
-        mm.encode_jpeg(w, h, px, gray, qt, ri)
+    assert mm.encode_jpeg(w, h, px, gray, qt, ri) == mm._encode_jpeg_pure(w, h, px, gray, qt, ri)
 
 
-def test_ipdv_encoder_twins_bit_identical_and_env_selectable(monkeypatch):
+def test_ipdv_encoder_twins_bit_identical():
     """r17 twin of the encoder-twin test above for the IPDV video codec:
     the motion search is all-integer, so the numpy path is structurally
     bit-identical — candidate shifts enumerate in the pure path's
@@ -2465,12 +2245,6 @@ def test_ipdv_encoder_twins_bit_identical_and_env_selectable(monkeypatch):
         assert fast == pure, (w, h, len(frames), gop)
         assert mm.decode_ipdv(fast) == (w, h, frames)
 
+    # the public encoder is the numpy twin
     w, h, frames, gop = cases[0]
-    want = mm._encode_ipdv_pure(w, h, frames, gop)
-    monkeypatch.setenv("SPARK_GRAFT_IPDV_ENCODER", "pure")
-    assert mm.encode_ipdv(w, h, frames, gop) == want
-    monkeypatch.setenv("SPARK_GRAFT_IPDV_ENCODER", "numpy")
-    assert mm.encode_ipdv(w, h, frames, gop) == want
-    monkeypatch.setenv("SPARK_GRAFT_IPDV_ENCODER", "ffmpeg")
-    with pytest.raises(ValueError, match="SPARK_GRAFT_IPDV_ENCODER"):
-        mm.encode_ipdv(w, h, frames, gop)
+    assert mm.encode_ipdv(w, h, frames, gop) == mm._encode_ipdv_pure(w, h, frames, gop)

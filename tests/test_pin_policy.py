@@ -92,29 +92,36 @@ def test_rotation_orders_never_checked_then_stalest():
 
 
 def test_fingerprint_sees_through_dispatch_registries():
-    """r13 self-found enforcement hole: a decoder twin referenced only
-    through a dispatch dict (``_JPEG_IMPLS = {"numpy": _decode_jpeg_numpy}``)
-    was invisible to the fingerprint — the dict's repr embeds function
-    addresses, so the address guard dropped the constant wholesale and
-    its values were never walked. An edit to a registry-dispatched twin
-    then left every reaching query's fingerprint unchanged: exactly the
-    helper-edit class this policy exists to catch. Pin that container
-    constants now contribute (a) their contained callables by SOURCE and
-    (b) an address-scrubbed structural repr."""
+    """r13 self-found enforcement hole: a callable referenced only
+    through a dispatch dict was invisible to the fingerprint — the
+    dict's repr embeds function addresses, so the address guard dropped
+    the constant wholesale and its values were never walked. An edit to
+    a registry-dispatched helper then left every reaching function's
+    fingerprint unchanged: exactly the helper-edit class this policy
+    exists to catch. Pin that container constants contribute (a) their
+    contained callables by SOURCE and (b) an address-scrubbed structural
+    repr. No registry query reaches such a constant today, so the walk
+    is pinned on ``pipeline.FORMS`` (form -> (schema, specs builder)),
+    reached from ``run_batch_pipeline`` through a spec-shaped stand-in."""
+    import types
+
     sys.path.insert(0, os.path.join(ROOT, "tools"))
     import pinfp
 
+    from etl_sample_spark import pipeline
     from etl_sample_spark.plans import REGISTRY
 
-    parts = pinfp._fingerprint_parts(REGISTRY["multimodal_jpeg_decode"])
+    spec = types.SimpleNamespace(spark=pipeline.run_batch_pipeline, oracle=None)
+    parts = pinfp._fingerprint_parts(spec)
     prefixes = {p.split("::", 1)[0] for p in parts}
     for want in (
-        "src:etl_sample_spark.operators.multimodal._decode_jpeg_numpy",
-        "src:etl_sample_spark.operators.multimodal._png_raw_numpy",
-        "const:etl_sample_spark.operators.multimodal._JPEG_IMPLS",
+        "const:etl_sample_spark.pipeline.FORMS",
+        "src:etl_sample_spark.forms.bank_form_specs",
+        "src:etl_sample_spark.forms.combined_form_specs",
     ):
         assert want in prefixes, f"fingerprint lost {want}"
     # the scrub must keep reprs stable: no raw addresses may survive
+    parts |= pinfp._fingerprint_parts(REGISTRY["multimodal_jpeg_decode"])
     flappy = [p for p in parts if " at 0x" in p]
     assert not flappy, f"address-bearing (run-flapping) parts: {flappy[:3]}"
 

@@ -109,17 +109,21 @@ def test_normalize_invariants_hold_for_any_corpus(spark, tmp_path_factory, docs)
 @settings(max_examples=60, deadline=None)
 def test_png_codec_roundtrip_property(width, height, seed):
     """Pure-codec property (no Spark): for ANY dims and pixel content,
-    encode_png → _decode_png recovers exact dims and the exact pixel
-    mean (ground truth computed from the pixel function, so paired
-    encoder/decoder bugs can't cancel). Scanline filters rotate with y,
-    so any height ≥ 5 drives all five unfilter paths."""
-    from etl_sample_spark.operators.multimodal import _decode_png, encode_png
+    encode_png → _png_raw returns exactly the input samples, and
+    _decode_png recovers exact dims and the exact pixel mean (ground
+    truth computed from the pixel function, so paired encoder/decoder
+    bugs can't cancel). Scanline filters rotate with y, so any height
+    ≥ 5 drives all five unfilter paths (None/Sub/Up/Average/Paeth)."""
+    from etl_sample_spark.operators.multimodal import _decode_png, _png_raw, encode_png
 
     def px(x, y):
         v = (seed + x * 7919 + y * 104729) % (256**3)
         return bytes((v % 256, (v >> 8) % 256, (v >> 16) % 256))
 
-    w, h, mean = _decode_png(encode_png(width, height, px))
+    payload = encode_png(width, height, px)
+    want = bytearray(v for y in range(height) for x in range(width) for v in px(x, y))
+    assert _png_raw(payload) == (width, height, 3, want)
+    w, h, mean = _decode_png(payload)
     exact = sum(
         sum(px(x, y)) for x in range(width) for y in range(height)
     ) / (width * height * 3)
@@ -135,52 +139,21 @@ def test_png_codec_roundtrip_property(width, height, seed):
 @settings(max_examples=30, deadline=None)
 def test_jpeg_constant_blocks_decode_bit_exact(bw, bh, seed):
     """For images of CONSTANT 8x8 blocks under the all-8s quant table,
-    encode_jpeg → _decode_jpeg is BIT-EXACT for any block values: DC =
+    encode_jpeg → _decode_jpeg_numpy is BIT-EXACT for any block values: DC =
     8·(v-128) quantizes losslessly by 8 and every AC coefficient is 0,
     so the only error source is IDCT float noise (~2e-14), squashed by
     the final round-to-int. This is the invariant the SQL oracle of
     multimodal_jpeg_decode rests on."""
-    from etl_sample_spark.operators.multimodal import _decode_jpeg, encode_jpeg
+    from etl_sample_spark.operators.multimodal import _decode_jpeg_numpy, encode_jpeg
 
     w, h = bw * 8, bh * 8
 
     def px(x, y):
         return (seed + (x // 8) * 11 + (y // 8) * 23) % 256
 
-    dw, dh, nc, samples = _decode_jpeg(encode_jpeg(w, h, px, gray=True))
+    dw, dh, nc, samples = _decode_jpeg_numpy(encode_jpeg(w, h, px, gray=True))
     assert (dw, dh, nc) == (w, h, 1)
     assert samples == [px(x, y) for y in range(h) for x in range(w)]
-
-
-@given(
-    width=st.integers(min_value=1, max_value=24),
-    height=st.integers(min_value=1, max_value=24),
-    seed=st.integers(min_value=0, max_value=2**31 - 1),
-)
-@settings(max_examples=40, deadline=None)
-def test_png_decoder_twins_agree_property(width, height, seed):
-    """PROPERTY form of the PNG twin pin: for ANY dims and ANY pixel
-    content the numpy unfilter twin must reproduce the pure decoder
-    byte-for-byte. encode_png assigns filter type y % 5, so any height
-    ≥ 5 exercises every filter (None/Sub/Up/Average/Paeth) including
-    the cumulative-sum Sub lane math and the scalar Average/Paeth
-    fallback, with random content hitting the mod-256 wrap paths."""
-    from etl_sample_spark.operators.multimodal import _png_raw, _png_raw_numpy, encode_png
-
-    def px(x, y):
-        v = (seed + x * 7919 + y * 104729) % (256**3)
-        return bytes((v % 256, (v >> 8) % 256, (v >> 16) % 256))
-
-    payload = encode_png(width, height, px)
-    assert _png_raw_numpy(payload) == _png_raw(payload)
-
-    # the native libpng twin (where the system library is present and
-    # probed good) is held to the SAME byte-identical bar — PNG is
-    # lossless, so native gets no tolerance allowance
-    from etl_sample_spark.operators.multimodal import _libpng_available, _png_raw_libpng
-
-    if _libpng_available():
-        assert _png_raw_libpng(payload) == _png_raw(payload)
 
 
 @given(
@@ -261,12 +234,12 @@ def test_jpeg_roundtrip_error_bound_property(width, height, seed):
     spread across the block; empirically ≤ ~10 for adversarial noise —
     a real bug in either direction (Huffman, zigzag, DC prediction,
     IDCT normalization) produces errors in the hundreds."""
-    from etl_sample_spark.operators.multimodal import _decode_jpeg, encode_jpeg
+    from etl_sample_spark.operators.multimodal import _decode_jpeg_numpy, encode_jpeg
 
     def px(x, y):
         return (seed + x * 7919 + y * 104729) % 256
 
-    dw, dh, nc, samples = _decode_jpeg(encode_jpeg(width, height, px, gray=True))
+    dw, dh, nc, samples = _decode_jpeg_numpy(encode_jpeg(width, height, px, gray=True))
     assert (dw, dh, nc) == (width, height, 1)
     worst = max(
         abs(samples[y * width + x] - px(x, y)) for y in range(height) for x in range(width)
@@ -287,7 +260,7 @@ def test_jpeg_color_constant_blocks_match_matrix_replay(bw, bh, seed):
     two rounded color matrices — the DCT leg is bit-transparent, so
     only the matrix arithmetic (reproducible in SQL) remains."""
     from etl_sample_spark.operators.multimodal import (
-        _decode_jpeg,
+        _decode_jpeg_numpy,
         _round_half_up,
         encode_jpeg,
     )
@@ -302,7 +275,7 @@ def test_jpeg_color_constant_blocks_match_matrix_replay(bw, bh, seed):
             (seed * 7 + bx * 23 + by * 37) % 256,
         )
 
-    dw, dh, nc, samples = _decode_jpeg(encode_jpeg(w, h, px, gray=False))
+    dw, dh, nc, samples = _decode_jpeg_numpy(encode_jpeg(w, h, px, gray=False))
     assert (dw, dh, nc) == (w, h, 3)
 
     def clamp(v):
@@ -457,7 +430,7 @@ def test_mjpeg_container_and_frame_decode_property(bw, bh, n_frames, seed):
     table) — for arbitrary block dims and frame counts."""
     from etl_sample_spark.operators.multimodal import (
         _avi_frames_tagged,
-        _decode_jpeg,
+        _decode_jpeg_numpy,
         encode_jpeg,
         encode_mjpeg_avi,
     )
@@ -475,7 +448,7 @@ def test_mjpeg_container_and_frame_decode_property(bw, bh, n_frames, seed):
     assert [t for t, _ in tagged] == [b"00dc"] * n_frames
     assert [b for _, b in tagged] == jpegs
     for f, (_, payload) in enumerate(tagged):
-        dw, dh, ncomp, px = _decode_jpeg(payload)
+        dw, dh, ncomp, px = _decode_jpeg_numpy(payload)
         assert (dw, dh, ncomp) == (w, h, 1)
         expect = [val(f, x, y) for y in range(h) for x in range(w)]
         assert px == expect

@@ -102,13 +102,13 @@ def _contained_objects(val) -> list:
     """Modules/callables held INSIDE container constants (depth-bounded).
 
     r13 self-found enforcement hole: a dispatch registry like
-    ``_JPEG_IMPLS = {"numpy": _decode_jpeg_numpy, ...}`` is a dict
-    constant whose repr embeds function addresses, so the address guard
-    dropped it wholesale AND its values were never pushed on the walk
-    stack — an edit to a registry-dispatched twin left every reaching
-    query's fingerprint unchanged, which is exactly the helper-edit
-    class this module exists to catch. Containers now contribute their
-    contained callables/modules to the closure."""
+    ``pipeline.FORMS = {"bank_scrape": (SCHEMA, bank_form_specs), ...}``
+    is a dict constant whose repr embeds function addresses, so the
+    address guard dropped it wholesale AND its values were never pushed
+    on the walk stack — an edit to a registry-dispatched helper left
+    every reaching query's fingerprint unchanged, which is exactly the
+    helper-edit class this module exists to catch. Containers now
+    contribute their contained callables/modules to the closure."""
     out = []
     stack = [(val, 0)]
     while stack:
@@ -177,7 +177,7 @@ def _fingerprint_parts(spec) -> set:
             elif isinstance(val, _SIMPLE):
                 # dispatch registries and other containers may hold
                 # callables — fingerprint those by SOURCE via the walk
-                # stack (r13: _JPEG_IMPLS/_PNG_RAW_IMPLS were invisible)
+                # stack (r13: dispatch dicts of callables were invisible)
                 stack.extend(_contained_objects(val))
                 if isinstance(val, (set, frozenset)):
                     # set iteration order varies with hash randomization —
