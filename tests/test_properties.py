@@ -109,21 +109,17 @@ def test_normalize_invariants_hold_for_any_corpus(spark, tmp_path_factory, docs)
 @settings(max_examples=60, deadline=None)
 def test_png_codec_roundtrip_property(width, height, seed):
     """Pure-codec property (no Spark): for ANY dims and pixel content,
-    encode_png → _png_raw returns exactly the input samples, and
-    _decode_png recovers exact dims and the exact pixel mean (ground
-    truth computed from the pixel function, so paired encoder/decoder
-    bugs can't cancel). Scanline filters rotate with y, so any height
-    ≥ 5 drives all five unfilter paths (None/Sub/Up/Average/Paeth)."""
-    from etl_sample_spark.operators.multimodal import _decode_png, _png_raw, encode_png
+    encode_png → _decode_png recovers exact dims and the exact pixel
+    mean (ground truth computed from the pixel function, so paired
+    encoder/decoder bugs can't cancel). Scanline filters rotate with y,
+    so any height ≥ 5 drives all five unfilter paths."""
+    from etl_sample_spark.operators.multimodal import _decode_png, encode_png
 
     def px(x, y):
         v = (seed + x * 7919 + y * 104729) % (256**3)
         return bytes((v % 256, (v >> 8) % 256, (v >> 16) % 256))
 
-    payload = encode_png(width, height, px)
-    want = bytearray(v for y in range(height) for x in range(width) for v in px(x, y))
-    assert _png_raw(payload) == (width, height, 3, want)
-    w, h, mean = _decode_png(payload)
+    w, h, mean = _decode_png(encode_png(width, height, px))
     exact = sum(
         sum(px(x, y)) for x in range(width) for y in range(height)
     ) / (width * height * 3)
@@ -154,6 +150,30 @@ def test_jpeg_constant_blocks_decode_bit_exact(bw, bh, seed):
     dw, dh, nc, samples = _decode_jpeg_numpy(encode_jpeg(w, h, px, gray=True))
     assert (dw, dh, nc) == (w, h, 1)
     assert samples == [px(x, y) for y in range(h) for x in range(w)]
+
+
+@given(
+    width=st.integers(min_value=1, max_value=24),
+    height=st.integers(min_value=1, max_value=24),
+    seed=st.integers(min_value=0, max_value=2**31 - 1),
+)
+@settings(max_examples=40, deadline=None)
+def test_png_decoder_twins_agree_property(width, height, seed):
+    """PROPERTY form of the PNG decoder pin: for ANY dims and ANY pixel
+    content the one PNG decoder, _png_raw, must return the encoder's
+    input samples byte-for-byte (the pixel function is the twin it is
+    held to). encode_png assigns filter type y % 5, so any height ≥ 5
+    exercises every filter (None/Sub/Up/Average/Paeth), with random
+    content hitting the mod-256 wrap paths."""
+    from etl_sample_spark.operators.multimodal import _png_raw, encode_png
+
+    def px(x, y):
+        v = (seed + x * 7919 + y * 104729) % (256**3)
+        return bytes((v % 256, (v >> 8) % 256, (v >> 16) % 256))
+
+    payload = encode_png(width, height, px)
+    want = bytearray(v for y in range(height) for x in range(width) for v in px(x, y))
+    assert _png_raw(payload) == (width, height, 3, want)
 
 
 @given(
